@@ -621,7 +621,7 @@ def main() -> None:
             if s_errors:
                 block["errors"] = s_errors
             result["scaled"] = block
-            cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+            cpus = spark.sparkContext.defaultParallelism
             twins = {
                 n: sql for n, sql in _twin_sqls().items() if n not in _SCALED_EXCLUDED
             }

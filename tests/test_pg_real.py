@@ -359,3 +359,63 @@ def test_cli_import_into_real_postgres(spark, pg_dsn, tmp_path):
         f"AND id = '{row.id}'",
     )
     assert got == row.label
+
+
+def _numbered(spark, lo: int, hi: int, parts: int, bad_last: bool = False):
+    """Frame of text numbers lo..hi-1 in ``parts`` contiguous partitions
+    (one CSV part each, in order); ``bad_last`` makes the final row 'x',
+    which COPY rejects for a bigint column — in the last part."""
+    from pyspark.sql import functions as F
+
+    v = F.col("id").cast("string")
+    if bad_last:
+        v = F.when(F.col("id") == hi - 1, F.lit("x")).otherwise(v)
+    return spark.range(lo, hi, numPartitions=parts).select(v.alias("v"))
+
+
+def test_failed_load_keeps_previous_table(spark, pg_dsn, tmp_path):
+    """A load that fails in its last CSV part rolls back whole: the
+    previous table is still there with its previous rows, not dropped
+    and not half-filled with the parts that went in before the bad one."""
+    from wikidata2pg_spark.sources.pg_copy import load_postgres_copy
+
+    before = _numbered(spark, 1000, 1250, 2)
+    assert load_postgres_copy(before, pg_dsn, "atomic_pg", "v bigint", str(tmp_path)) == 250
+    bad = _numbered(spark, 0, 400, 4, bad_last=True)
+    with pytest.raises(RuntimeError, match="invalid input syntax"):
+        load_postgres_copy(bad, pg_dsn, "atomic_pg", "v bigint", str(tmp_path))
+    assert _q(pg_dsn, "SELECT count(*) || ':' || min(v) FROM atomic_pg") == "250:1000"
+
+
+def test_failed_upsert_leaves_no_staging_table(spark, pg_dsn, tmp_path):
+    """An upsert whose staging load fails must not leave the staging
+    table behind: the load runs before the merge's cleanup guard, so it
+    has to roll back on its own."""
+    from wikidata2pg_spark.sources.pg_copy import upsert_postgres_copy
+
+    bad = _numbered(spark, 0, 400, 4, bad_last=True)
+    with pytest.raises(RuntimeError, match="invalid input syntax"):
+        upsert_postgres_copy(bad, pg_dsn, "ups_fail", "v bigint", ["v"], str(tmp_path))
+    assert _q(
+        pg_dsn, "SELECT count(*) FROM pg_class WHERE relname LIKE '%__staging_%'"
+    ) == "0"
+
+
+def test_load_is_one_psql_session(spark, pg_dsn, tmp_path, monkeypatch):
+    """A multi-part load starts exactly one psql, and part paths holding
+    a single quote reach \\copy intact."""
+    from wikidata2pg_spark.sources import pg_copy
+
+    calls = []
+    run = pg_copy._run_psql
+
+    def counting(dsn, argv_tail, stdin):
+        calls.append(argv_tail)
+        return run(dsn, argv_tail, stdin)
+
+    monkeypatch.setattr(pg_copy, "_run_psql", counting)
+    work_dir = tmp_path / "it's here"
+    df = _numbered(spark, 0, 400, 4)
+    assert pg_copy.load_postgres_copy(df, pg_dsn, "one_psql", "v bigint", str(work_dir)) == 400
+    assert len(calls) == 1
+    assert _q(pg_dsn, "SELECT sum(v) FROM one_psql") == str(sum(range(400)))

@@ -221,6 +221,31 @@ def test_gz_dump_file_parse_equals_inline(spark, tmp_path):
     assert fa == fb
 
 
+def test_latest_revisions_one_scan_keeps_every_corrupt_line(spark, tmp_path):
+    """The corrupt-line contract through the file path: three truncated
+    lines (two of them byte-identical) appended to the micro-dump all
+    come out of clean -> parse -> latest_revisions as null-id rows that
+    keep their raw text, the dedup still picks Q42's rev 100, and the
+    executed plan scans the dump once."""
+    import gzip
+
+    corrupt = [DUMP_LINES[1][:60], DUMP_LINES[1][:60], DUMP_LINES[3][:25]]
+    gz = tmp_path / "corrupt.json.gz"
+    with gzip.open(gz, "wt", encoding="utf-8") as fh:
+        fh.write("\n".join(DUMP_LINES + corrupt) + "\n")
+    raw = spark.read.text(str(gz)).withColumnRenamed("value", "line")
+    out = flatten.latest_revisions(
+        flatten.parse_entities(flatten.clean_dump_lines(raw))
+    )
+    got = out.select("raw_line", F.col("e.id").alias("id"), "e.lastrevid")
+    rows = got.collect()
+    assert sorted(r.raw_line for r in rows if r.id is None) == sorted(corrupt)
+    assert [r.lastrevid for r in rows if r.id == "Q42"] == [100]
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    final_plan = plan.split("== Initial Plan ==")[0]
+    assert final_plan.count("FileScan text") == 1
+
+
 def test_cli_parquet_export(spark, tmp_path):
     """--parquet-dir: the lakehouse export path — same pipeline, parquet
     sink. Counts equal the flatteners' and the written tables are readable

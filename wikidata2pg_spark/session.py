@@ -19,6 +19,9 @@ import os
 
 from pyspark.sql import SparkSession
 
+# The directory that holds the wikidata2pg_spark package.
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 # Runtime-settable SQL confs, safe to apply to a session we did not build.
 # Verified this session: nanosAsLong takes effect when set post-construction.
 RUNTIME_CONFS: dict[str, str] = {
@@ -57,6 +60,14 @@ def configure_session(spark: SparkSession) -> SparkSession:
             spark.conf.set(k, v)
         except Exception:
             pass  # non-runtime conf on this build — builder path covers it
+    # Python workers import this package in UDFs but do not inherit this
+    # process's sys.path, only PYTHONPATH, which UDFs take from this dict
+    # when they are wrapped — so workers find the package from any
+    # working directory, in sessions built elsewhere too.
+    env = spark.sparkContext.environment
+    paths = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if _PACKAGE_PARENT not in paths:
+        env["PYTHONPATH"] = os.pathsep.join([_PACKAGE_PARENT, *paths])
     spark._w2pg_configured = True
     return spark
 
@@ -67,11 +78,12 @@ def get_session(
 ) -> SparkSession:
     """Build (or reuse) a local session sized for this box.
 
-    local[N] with N from $SPARK_GRAFT_CPUS (default 32); shuffle partitions
-    default to min(2*cpus, 32) — small SFs shouldn't pay 200-partition
-    scheduling overhead, and AQE coalesces further at runtime.
+    local[N] with N from $SPARK_GRAFT_CPUS, by default the cores this
+    process may run on; shuffle partitions default to min(cpus, 16) —
+    small SFs shouldn't pay 200-partition scheduling overhead, and AQE
+    coalesces further at runtime.
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     if shuffle_partitions is None and "SPARK_GRAFT_SHUFFLE" in os.environ:
         shuffle_partitions = int(os.environ["SPARK_GRAFT_SHUFFLE"])
     if shuffle_partitions is None:

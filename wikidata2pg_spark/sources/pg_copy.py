@@ -11,11 +11,11 @@ double/NULL wire formats this engine's exports rely on.
 
 Shape: ``df.write.csv`` produces part files DISTRIBUTED (every executor
 writes its partitions in parallel — the export scales with the
-cluster); the COPY phase streams each part through ``psql`` from the
-driver. Loading into ONE Postgres is inherently a funnel — at cluster
-scale you point the same per-part command at each executor via
-``foreachPartition`` when workers carry a psql/driver, or COPY from a
-shared filesystem; the CSV convention below is identical either way.
+cluster); the load is then ONE ``psql`` session per table, run as ONE
+transaction: drop, create, a ``\\copy`` of every part and the count. A
+failed load rolls back whole, so readers keep seeing the previous table
+and never a partial one. Loading into ONE Postgres is inherently a
+funnel; the parts must sit on a filesystem the loading ``psql`` reads.
 
 CSV <-> COPY contract (pinned in tests/test_pg_real.py with crafted
 quotes/newlines/unicode/NULL rows):
@@ -89,21 +89,24 @@ def _split_top_level(ddl: str) -> list[str]:
 
 
 def load_postgres_copy(df, dsn: str, table: str, ddl: str, work_dir: str) -> int:
-    """Export ``df`` as CSV parts, (re)create ``table`` from ``ddl``, and
-    stream every part through ``COPY ... FROM STDIN``. Returns the row
-    count Postgres reports after the load. ``dsn`` is a libpq DSN or URI
-    (e.g. ``postgresql://user@/db?host=/tmp/socketdir&port=55432``)."""
+    """Export ``df`` as CSV parts, then in one ``psql`` session and one
+    transaction (re)create ``table`` from ``ddl``, COPY every part and
+    return the count. A failed load raises and rolls back whole, leaving
+    the previous ``table``. ``dsn`` is a libpq DSN or URI (e.g.
+    ``postgresql://user@/db?host=/tmp/socketdir&port=55432``)."""
     csv_dir = os.path.join(work_dir, f"csv_{table}")
     export_csv(df, csv_dir)
-    _psql(dsn, f"DROP TABLE IF EXISTS {table}")
-    _psql(dsn, f"CREATE TABLE {table} ({ddl})")
-    copy_sql = (
-        f"\\copy {table} FROM STDIN WITH (FORMAT csv, NULL '\\N', QUOTE '\"', ESCAPE '\"')"
-    )
-    for part in sorted(glob.glob(os.path.join(csv_dir, "part-*.csv"))):
-        with open(part, "rb") as fh:
-            _run_psql(dsn, ["-c", copy_sql], fh)
-    return int(_psql(dsn, f"SELECT count(*) FROM {table}"))
+    opts = "FORMAT csv, NULL '\\N', QUOTE '\"', ESCAPE '\"'"
+    parts = sorted(glob.glob(os.path.join(csv_dir, "part-*.csv")))
+    quoted = [part.replace("'", "''") for part in parts]
+    sql = [
+        f"DROP TABLE IF EXISTS {table}",
+        f"CREATE TABLE {table} ({ddl})",
+        *(f"\\copy {table} FROM '{q}' WITH ({opts})" for q in quoted),
+        f"SELECT count(*) FROM {table}",
+    ]
+    argv = ["-1", "-A", "-t", *(a for c in sql for a in ("-c", c))]
+    return int(_run_psql(dsn, argv, subprocess.DEVNULL).stdout.split()[-1])
 
 
 def upsert_postgres_copy(

@@ -66,22 +66,19 @@ def latest_revisions(parsed: DataFrame) -> DataFrame:
     (ADVICE r1 — row_number on lastrevid alone is nondeterministic)."""
     from pyspark.sql import Window
 
-    # Null ids (unparseable lines) must BYPASS the dedup: partitionBy
-    # groups all NULLs together and row_number would keep exactly one,
-    # silently dropping every other corrupt line from the raw layer —
-    # violating the "nothing is lost" contract. Dedup real ids; pass
-    # null-id rows through untouched.
-    good = parsed.filter(F.col("e.id").isNotNull())
-    bad = parsed.filter(F.col("e.id").isNull())
+    # Null ids (unparseable lines) must ALL survive — the "nothing is
+    # lost" contract of the raw layer. They share one window partition,
+    # where row_number would keep one of them, so the filter keeps every
+    # null-id row whatever its rank. One window over `parsed` reads the
+    # input once; a separate null-id branch would scan and parse it twice.
     w = Window.partitionBy(F.col("e.id")).orderBy(
         F.col("e.lastrevid").desc(), F.col("raw_line").desc()
     )
-    deduped = (
-        good.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
+    return (
+        parsed.withColumn("_rn", F.row_number().over(w))
+        .filter((F.col("_rn") == 1) | F.col("e.id").isNull())
         .drop("_rn")
     )
-    return deduped.unionByName(bad)
 
 
 def labels_table(parsed: DataFrame) -> DataFrame:
